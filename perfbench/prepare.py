@@ -25,20 +25,20 @@ CRAWL_DOCS = os.path.join(HERE, "data", "documents.parquet")
 CRAWL_SHA256 = "d10b0da67e5aceb465e89365781dab5c69d3c62b64a8308398c6fd3fb09bcf82"
 
 N_LINKED_PAGES = 1000      # build_linked corpus size
-SEED_BATCH_PAGES = 20      # batch 0 creates the ingest table before timing
-BATCH_PAGES = 100          # pages per timed ingest micro-batch
-N_BATCHES = 2              # the seed batch and the timed one
+BATCH_PAGES = 100          # pages per ingest micro-batch
+N_BATCHES = 7              # most batches a run lands; batch 0 creates the table
 RECRAWL_SHARE = 0.25       # share of a batch re-sent from earlier batches
 VOCAB_KEYS = 64            # candidate fetch keys, drawn from the seeded table
 BLOOM_M_BITS, BLOOM_K = 1 << 18, 3   # run_incremental's defaults
 
 WORKLOADS = {
     # instance filter min_conf; group filter min_instances (None: no group
-    # filter); link + typer; extract_pages' include_layers / dedup_sentences
+    # filter); link + typer; extract_pages' include_layers / dedup_sentences;
+    # untimed builds before the measured one (see BENCHMARK.md)
     "build_crawl": dict(min_conf=0.0, min_instances=None, linked=False,
-                        include_layers=False, dedup_sentences=False),
+                        include_layers=False, dedup_sentences=False, warmup_builds=1),
     "build_linked": dict(min_conf=0.5, min_instances=2, linked=True,
-                         include_layers=False, dedup_sentences=True),
+                         include_layers=False, dedup_sentences=True, warmup_builds=0),
 }
 
 
@@ -83,13 +83,13 @@ def crawl_pages() -> pd.DataFrame:
     return docs[["url", "text", "lang"]]
 
 
-def _extract_cached(pages: pd.DataFrame, cache_dir: str, processes: int):
+def _extract_cached(pages: pd.DataFrame, cache_dir: str):
     """Crawl reference extraction, cached on content: the table is fixed,
     so only an NLP or reference change recomputes it."""
     os.makedirs(cache_dir, exist_ok=True)
     base = os.path.join(cache_dir, f"crawl_{CRAWL_SHA256[:12]}_{_source_key()}")
     if not os.path.exists(base + ".done"):
-        ex, sents = ref.extract(pages, processes)
+        ex, sents = ref.extract(pages)
         ex.to_parquet(base + ".ex.parquet", index=False)
         pd.DataFrame({"s": sents}).to_parquet(base + ".sents.parquet", index=False)
         open(base + ".done", "w").close()
@@ -106,7 +106,7 @@ def _batches(pool: pd.DataFrame, rng: random.Random) -> list[pd.DataFrame]:
     out = []
     for b in range(N_BATCHES):
         n_old = min(n_re, len(landed))
-        n_fresh = SEED_BATCH_PAGES if b == 0 else BATCH_PAGES - n_old
+        n_fresh = BATCH_PAGES - n_old
         idx = [next(fresh) for _ in range(n_fresh)]
         idx += rng.sample(landed, n_old)
         landed += idx[:n_fresh]
@@ -114,20 +114,20 @@ def _batches(pool: pd.DataFrame, rng: random.Random) -> list[pd.DataFrame]:
     return out
 
 
-def prepare(workload: str, seed: int, work: str, cache_dir: str,
-            processes: int) -> tuple[dict, Reference]:
+def prepare(workload: str, seed: int, work: str,
+            cache_dir: str) -> tuple[dict, Reference]:
     """Write inputs under ``work``; return (worker plan, reference)."""
     cfg = WORKLOADS[workload]
     rng = random.Random(seed)
     inputs = os.path.join(work, "inputs")
     os.makedirs(os.path.join(inputs, "batches"))
-    plan = {"workload": workload, "seed": seed, **cfg,
+    plan = {"workload": workload, "seed": seed, **cfg, "n_batches": N_BATCHES,
             "batch_dir": os.path.join(inputs, "batches")}
 
     if cfg["linked"]:
         from openie_backend_spark import synth
 
-        pool_size = N_LINKED_PAGES + SEED_BATCH_PAGES + N_BATCHES * BATCH_PAGES
+        pool_size = N_LINKED_PAGES + N_BATCHES * BATCH_PAGES
         allpages = synth.generate_pages(pool_size, seed=seed)
         allpages["warc_ts"] = allpages["warc_ts"].astype("datetime64[us, UTC]")
         build = allpages.iloc[:N_LINKED_PAGES]
@@ -137,7 +137,7 @@ def prepare(workload: str, seed: int, work: str, cache_dir: str,
         for name, df in synth.generate_dims(seed).items():
             df.to_parquet(os.path.join(dims_dir, f"{name}.parquet"), index=False)
         plan["dims_dir"] = dims_dir
-        ex_all, _ = ref.extract(allpages[["url", "text", "lang"]], processes)
+        ex_all, _ = ref.extract(allpages[["url", "text", "lang"]])
         build_urls = set(build["url"])
         is_build = ex_all["url"].isin(build_urls)
         ex_build, ex_by_url = ex_all[is_build], ex_all[~is_build]
@@ -147,7 +147,7 @@ def prepare(workload: str, seed: int, work: str, cache_dir: str,
         # the crawl table is fixed: the seed does not change the build
         # corpus, only which documents the ingest batches re-send
         build = crawl_pages()
-        ex_build, sents = _extract_cached(build, cache_dir, processes)
+        ex_build, sents = _extract_cached(build, cache_dir)
         ex_by_url = ex_build
         order = list(range(len(build)))
         rng.shuffle(order)
@@ -184,7 +184,7 @@ def prepare(workload: str, seed: int, work: str, cache_dir: str,
         tables.append(current)
         landed.append(len(pages))
 
-    # fetches run between the seed batch and the timed batch
+    # fetch keys come from the table batch 0 creates
     plan["vocab"] = tables[0][ref.KEY].sample(
         min(VOCAB_KEYS, len(tables[0])), random_state=seed).values.tolist()
     stats = {"sentences": len(sents), "distinct_sentences": len(set(sents))}

@@ -16,7 +16,6 @@ chunker or matcher moves the reference and the program together.
 from __future__ import annotations
 
 import hashlib
-import multiprocessing
 import re
 
 import pandas as pd
@@ -31,43 +30,40 @@ INSTANCE_ID = ["url", "sent_id", "arg1_start", "arg1_end", "rel_start",
                "rel_end", "arg2_start", "arg2_end"]
 
 
-def _extract_chunk(pages: list[tuple[str, str]]) -> tuple[list[tuple], list[str]]:
-    """(url, text) pairs -> (extraction rows, sentences in page order)."""
+def _extract_sentences(sentences: list[str]) -> list[list[tuple]]:
+    """Per sentence: (spans, span texts, norms, confidence) rows."""
     from openie_backend_spark.nlp import chunker, confidence, reverb, stemmer
 
-    rows, sentences = [], []
-    for url, text in pages:
-        for sid, sent in enumerate(chunker.split_sentences(text)):
-            sentences.append(sent)
-            toks, tags, chks = chunker.chunk_sentence(sent)
-            for e in reverb.extract(toks, tags, chks):
-                spans = (e.arg1, e.rel, e.arg2)
-                rows.append((
-                    url, sid, *[b for s in spans for b in s],
-                    *[" ".join(toks[s:t]) for s, t in spans],
-                    *[stemmer.index_key_part(toks[s:t], tags[s:t])
-                      for s, t in spans],
-                    confidence.reverb_confidence(
-                        toks, tags, chks, e.arg1, e.rel, e.arg2),
-                ))
-    return rows, sentences
+    out = []
+    for sent in sentences:
+        toks, tags, chks = chunker.chunk_sentence(sent)
+        rows = []
+        for e in reverb.extract(toks, tags, chks):
+            spans = (e.arg1, e.rel, e.arg2)
+            rows.append((
+                *[b for s in spans for b in s],
+                *[" ".join(toks[s:t]) for s, t in spans],
+                *[stemmer.index_key_part(toks[s:t], tags[s:t]) for s, t in spans],
+                confidence.reverb_confidence(toks, tags, chks, e.arg1, e.rel, e.arg2),
+            ))
+        out.append(rows)
+    return out
 
 
-def extract(pages: pd.DataFrame, processes: int = 1) -> tuple[pd.DataFrame, list[str]]:
-    """Extraction rows and sentence list over the ``en`` pages."""
+def extract(pages: pd.DataFrame) -> tuple[pd.DataFrame, list[str]]:
+    """Extraction rows and sentence list (page order) over the ``en``
+    pages. The NLP runs once per distinct sentence: its output depends
+    on the sentence text alone."""
+    from openie_backend_spark.nlp import chunker
+
     en = pages[pages["lang"] == "en"]
-    items = list(zip(en["url"], en["text"]))
-    if processes <= 1 or len(items) < 64:
-        rows, sents = _extract_chunk(items)
-    else:
-        n = processes * 4
-        chunks = [items[i::n] for i in range(n)]
-        ctx = multiprocessing.get_context("spawn")
-        with ctx.Pool(processes) as pool:
-            parts = pool.map(_extract_chunk, chunks)
-        rows = [r for p, _ in parts for r in p]
-        sents = [s for _, p in parts for s in p]
-    return pd.DataFrame(rows, columns=EXTRACTION_COLS), sents
+    split = [(url, sid, sent) for url, text in zip(en["url"], en["text"])
+             for sid, sent in enumerate(chunker.split_sentences(text))]
+    distinct = list(dict.fromkeys(sent for _, _, sent in split))
+    by_sentence = dict(zip(distinct, _extract_sentences(distinct)))
+    rows = [(url, sid, *r) for url, sid, sent in split for r in by_sentence[sent]]
+    return (pd.DataFrame(rows, columns=EXTRACTION_COLS),
+            [sent for _, _, sent in split])
 
 
 # ---- instance quality filter (operators/filters.instance_quality_filter)

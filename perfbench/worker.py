@@ -1,18 +1,19 @@
 """The benchmark's Spark process: one fresh process per run.
 
 ``python3 perfbench/worker.py <plan.json>`` starts a session with
-``get_spark``, builds the workload's KG once through the layers'
-public functions, seeds the ingest table with one micro-batch, and
-runs a closed-loop client (one client, next operation only after the
-previous one returns): conjunctive fetches and point lookups for
-``seconds`` seconds, then one timed ingest micro-batch. It writes
-``result.json`` next to the plan; ``run.py`` checks the outputs and
-prints the metrics.
+``get_spark`` and builds the workload's KG through the layers' public
+functions: ``warmup_builds`` untimed builds, then the measured one.
+Then one closed-loop client (next operation only after the previous
+one returns) lands an untimed ingest micro-batch that creates the
+ingest table, and serves and ingests for ``seconds``: micro-batches
+that merge into the table, each followed by a conjunctive fetch and a
+point lookup, at least MIN_BATCHES batches. It writes ``result.json``
+next to the plan; ``run.py`` checks the outputs and prints the metrics.
 
-With ``trace`` set, every layer call of the build is a span whose
-output is forced at the boundary (``localCheckpoint``) and whose jobs
-carry the layer name as job group; the session writes an event log.
-Tracing overhead is the traced build's wall against the untraced
+With ``trace`` set, every layer call of the measured build is a span
+whose output is forced at the boundary (``localCheckpoint``) and whose
+jobs carry the layer name as job group; the session writes an event
+log. Tracing overhead is the traced build's wall against the untraced
 runs' build wall on the same workload.
 """
 
@@ -31,7 +32,9 @@ sys.path.insert(0, ROOT)
 from perfbench import procfs  # noqa: E402
 
 SHAPES = ["arg1", "rel", "arg2", "arg1+rel", "rel+arg2", "arg1+arg2"]
-WARMUP_PAIRS = 6                 # untimed pairs: query-path JIT before timing
+PAIRS_PER_BATCH = 1              # (fetch, lookup) pairs after each ingest batch
+TRACED_PAIRS_PER_BATCH = 4       # more samples for the traced query latencies
+MIN_BATCHES = 2                  # timed ingest batches per run at least
 MAX_INSTANCES_PER_GROUP = 10     # fetch payload cap
 SPO_BUCKETS = 16                 # the bucket count lookups assume
 
@@ -168,7 +171,7 @@ def build(spark, plan: dict, kg_dir: str, tracer: Tracer) -> dict:
 
     pipe = tracer.step("materialize", materialize, force=False)
     wall = time.time() - t0
-    return {"wall_s": wall, "cpu_s": _cpu_seconds() - c0,
+    return {"wall_s": wall, "cpu_s": _cpu_seconds() - c0, "kg_dir": kg_dir,
             "stages": {r.name: r.rows for r in pipe.results}}
 
 
@@ -303,20 +306,17 @@ class Client:
                                 int(x["group_size"])] for x in rows)}
 
     def lookup_ids(self) -> dict[str, list[str]]:
-        return {
-            side: sorted(r[0] for r in self.spark.read.parquet(d)
-                         .select(f"{side}_id").distinct().collect())
-            for side, d in (("subject", self.spo_dir), ("object", self.ops_dir))
-        }
+        """Distinct subject and object ids of the KG, read without Spark."""
+        import pyarrow.parquet as pq
 
-    def run(self, seconds: float, ids: dict[str, list[str]]) -> None:
-        """Closed loop: (fetch, lookup) pairs for ``seconds``, then one
-        ingest micro-batch."""
-        t_end = time.perf_counter() + seconds
-        while time.perf_counter() < t_end:
-            self.records.append(self.fetch())
-            self.records.append(self.lookup(ids))
-        self.records.append(self.ingest_batch())
+        def ids(d: str, col: str) -> list[str]:
+            return sorted({x for root, _, files in os.walk(d) for f in files
+                           if f.endswith(".parquet")
+                           for x in pq.read_table(os.path.join(root, f), columns=[col])
+                           .column(0).to_pylist()})
+
+        return {"subject": ids(self.spo_dir, "subject_id"),
+                "object": ids(self.ops_dir, "object_id")}
 
 
 def _worker_tagger(spark) -> list[str]:
@@ -377,28 +377,43 @@ def main(plan_path: str) -> None:
         raise SystemExit(f"tagger fell back: here {res['tagger']}, "
                          f"workers {res['worker_tagger']}")
 
-    kg_dir = os.path.join(work, "kg")
-    tracer = Tracer(spark, trace)
-    res["build"] = build(spark, plan, kg_dir, tracer)
-    res["kg_dir"] = kg_dir
+    kg_root = os.path.join(work, "kg")
+    # ``warmup_builds`` untimed builds, then the measured one (traced
+    # with ``trace``), whose KG the lookups read
+    builds: list[dict] = []
+    for i in range(plan["warmup_builds"] + 1):
+        tracer = Tracer(spark, trace and i == plan["warmup_builds"])
+        builds.append(build(spark, plan, os.path.join(kg_root, f"b{i}"), tracer))
     if trace:
         tracer.count_rows()
         res["spans"] = tracer.spans
         res["kg_files_written"] = sum(
-            f.endswith(".parquet") for _, _, fs in os.walk(kg_dir) for f in fs)
-
-    client = Client(spark, plan, work, kg_dir, trace)
+            f.endswith(".parquet") for _, _, fs in os.walk(builds[-1]["kg_dir"]) for f in fs)
+    client = Client(spark, plan, work, builds[-1]["kg_dir"], trace)
     client.ingest_batch()          # batch 0 creates the ingest table, untimed
     ids = client.lookup_ids()
-    for _ in range(WARMUP_PAIRS):  # untimed: the first pairs run slower
-        client.fetch()
-        client.lookup(ids)
-    t_mix = time.time()
+
+    # serve and ingest for ``seconds``: ingest micro-batches that merge
+    # into the table, each followed by fetch/lookup pairs, until the
+    # next batch would end past the window (give or take half a batch),
+    # and at least MIN_BATCHES batches
+    t_window = time.perf_counter()
+    t_end = t_window + plan["seconds"]
     try:
-        client.run(plan["seconds"], ids)
+        while True:
+            t0 = time.perf_counter()
+            client.records.append(client.ingest_batch())
+            for _ in range(TRACED_PAIRS_PER_BATCH if trace else PAIRS_PER_BATCH):
+                client.records.append(client.fetch())
+                client.records.append(client.lookup(ids))
+            now = time.perf_counter()
+            if client.version + 1 >= plan["n_batches"] or (
+                    client.version >= MIN_BATCHES and now + 0.5 * (now - t0) > t_end):
+                break
     except Exception:              # counted as a failed operation
         client.records.append({"op": "error", "error": traceback.format_exc()[-2000:]})
-    res["mix_s"] = time.time() - t_mix
+    res["window_s"] = time.perf_counter() - t_window
+    res["builds"] = builds
     res["records"] = client.records
     res["version"] = client.version
     res["groups_dir"] = client.groups_dir
