@@ -10,9 +10,17 @@ sandbox harness.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+# the directory that holds this package (a directory, or the zip shipped
+# with --py-files): the Python workers import the daemon module from it
+# whatever the driver's cwd is
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -27,7 +35,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     trivial mapInPandas over ``defaultParallelism`` single-row
     partitions forks a worker per task slot; ``spark.python.worker.reuse``
     (default on) then keeps them for every later Python stage.
-    Best-effort: a failure must never block session creation.
+    Best-effort: a failure must never block session creation, so it
+    is logged with its traceback and the session is returned cold.
     """
     try:
         n = spark.sparkContext.defaultParallelism
@@ -77,7 +86,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     except Exception:
-        pass
+        _log.warning("Python worker prewarm failed; the session starts cold",
+                     exc_info=True)
 
 
 def get_spark(
@@ -107,7 +117,13 @@ def get_spark(
         # per-worker startup tax exists on any executor.
         .config("spark.python.daemon.module",
                 "openie_backend_spark.warm_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # list up to this many paths on the driver instead of launching
+        # a listing job: above streaming.ingest.N_BUCKETS (64), so that
+        # reading the ingest groups table, whole or by touched buckets,
+        # starts no job; the default 32 costs a 64-task job per read
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # experiment hook only (CDS / JIT / GC A-Bs); default empty

@@ -40,6 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openie_backend_spark.operators.dedup import bloom_bits, bloom_probe
 from openie_backend_spark.operators.extract import extract_pages
 from openie_backend_spark.operators.group import GROUP_KEY, group_extractions
 
@@ -137,7 +138,29 @@ def run_incremental(
     at-least-once window) or — if bits landed but the marker did not —
     probes the batch as fully seen and no-ops, which is consistent
     because the merge had committed. Appending bit rows is set union
-    (replay-idempotent by construction)."""
+    (replay-idempotent by construction).
+
+    Per-batch cost model: every input is read once and no job only
+    lists files or infers a schema.
+
+    - The kept pages are cut once (``localCheckpoint``) after the
+      Bloom probe, so extraction and the bit append share one probe.
+    - The grouped batch is cut once; ``touched`` is one collect on it.
+    - The merge reads only the touched buckets that already exist, as
+      explicit ``bucket=NN`` paths under ``basePath``, with the table
+      schema given. A touched bucket can be new, and reading a path
+      that does not exist fails, so missing ones are skipped.
+    - The merge is repartitioned by ``bucket`` over at most
+      ``defaultParallelism`` tasks: one writer per bucket, so each
+      bucket holds one file at any batch size, and the touched buckets
+      are written in parallel instead of by one coalesced task.
+    - ``get_spark`` sets ``parallelPartitionDiscovery.threshold`` above
+      ``N_BUCKETS``: up to that many paths are listed on the driver.
+      At Spark's default of 32, both the touched-bucket read and a
+      reader's refresh of the whole table start a 64-task listing job.
+
+    What remains per batch is the Bloom probe, the extraction stage,
+    the merge join and the write of one file per touched bucket."""
 
     # Batch ids are unique only per checkpoint: a deleted or replaced
     # checkpoint restarts them at 0, and a bare _batch_0.done from the
@@ -145,6 +168,8 @@ def run_incremental(
     # batch. Namespace markers by a run id that lives (and dies) with
     # the checkpoint directory itself.
     os.makedirs(checkpoint_dir, exist_ok=True)
+    # markers land here even when no batch has written a bucket yet
+    os.makedirs(groups_dir, exist_ok=True)
     run_id_path = os.path.join(checkpoint_dir, "_ingest_run_id")
     if not os.path.exists(run_id_path):
         with open(run_id_path, "w") as fh:
@@ -164,60 +189,69 @@ def run_incremental(
         if os.path.exists(marker):
             return
         seen_dir = os.path.join(groups_dir, "_seen_bits")
-        if dedup_pages:
-            from openie_backend_spark.operators.dedup import bloom_bits, bloom_probe
-
-            if os.path.isdir(seen_dir):
-                flags = bloom_probe(
-                    spark.read.parquet(seen_dir), batch_df,
-                    m_bits=bloom_m_bits, k_hashes=bloom_k, id_col="url",
-                )
-                batch_df = batch_df.join(
-                    flags.filter(F.col("maybe_dup"))
-                    .select(F.col("doc_id").alias("url")),
-                    "url", "left_anti",
-                )
+        pages = batch_df
+        if dedup_pages and os.path.isdir(seen_dir):
+            # the schema is known: reading with it starts no job to
+            # infer it from a file footer
+            bits_schema = bloom_bits(batch_df, m_bits=bloom_m_bits, k_hashes=bloom_k).schema
+            flags = bloom_probe(
+                spark.read.schema(bits_schema).parquet(seen_dir), batch_df,
+                m_bits=bloom_m_bits, k_hashes=bloom_k, id_col="url",
+            )
+            # cut: extraction and the bit append both read the kept
+            # pages, and the probe must run once, not once per reader.
+            # Bits of the dropped pages are already all set, so the
+            # kept pages' bits give the same union as the whole batch's.
+            pages = batch_df.join(
+                flags.filter(F.col("maybe_dup"))
+                .select(F.col("doc_id").alias("url")),
+                "url", "left_anti",
+            ).localCheckpoint(eager=True)
         incoming = (
-            group_extractions(extract_pages(batch_df), corpus="stream")
+            group_extractions(extract_pages(pages), corpus="stream")
             .withColumn("bucket", bucket_col(n_buckets))
             .localCheckpoint(eager=True)  # small; avoids re-extraction
         )
         touched = [r["bucket"] for r in incoming.select("bucket").distinct().collect()]
-        if not touched:
-            # extraction-less pages still count as SEEN (ADVICE r5):
-            # without recording them, every future re-crawl of a page
-            # that yields no groups re-runs the full NLP stage,
-            # breaking the "re-crawl costs k md5s" contract. There is
-            # no merge to order against on this path, so bits + marker
-            # commit directly.
-            if dedup_pages:
-                from openie_backend_spark.operators.dedup import bloom_bits
-
-                bloom_bits(batch_df, m_bits=bloom_m_bits, k_hashes=bloom_k) \
-                    .write.mode("append").parquet(seen_dir)
-            with open(marker, "w") as fh:
-                fh.write("merged\n")
-            return
-        has_table = os.path.isdir(groups_dir) and any(
-            e.startswith("bucket=") for e in os.listdir(groups_dir)
-        )
-        if has_table:
-            existing = spark.read.parquet(groups_dir).filter(
-                F.col("bucket").isin(touched)  # partition-pruned scan
+        if touched:
+            # only the touched buckets that exist: a path that does not
+            # exist fails the read, and listing the whole table would
+            # list all n_buckets directories
+            paths = [
+                p for p in (os.path.join(groups_dir, f"bucket={b}") for b in touched)
+                if os.path.isdir(p)
+            ]
+            new_groups = incoming.withColumn("needs_relink", F.lit(True))
+            if paths:
+                # this function writes every bucket file, so the table
+                # schema is the new groups' schema (no inference job)
+                existing = (
+                    spark.read.schema(new_groups.schema)
+                    .option("basePath", groups_dir).parquet(*paths)
+                )
+                merged = merge_groups(existing, incoming)
+            else:
+                merged = new_groups
+            (
+                # one writer per bucket: every row of a bucket hashes to
+                # one task, which writes the bucket's single file, while
+                # the touched buckets are written in parallel, by no
+                # more tasks than there are buckets to write
+                merged.repartition(
+                    min(spark.sparkContext.defaultParallelism, len(touched)), "bucket"
+                )
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(groups_dir)
             )
-            merged = merge_groups(existing, incoming)
-        else:
-            merged = incoming.withColumn("needs_relink", F.lit(True))
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(groups_dir)
-        )
         if dedup_pages:
             # after the merge commit (see docstring crash ordering);
-            # duplicate bit rows from a replay are harmless set union
-            bloom_bits(batch_df, m_bits=bloom_m_bits, k_hashes=bloom_k) \
+            # duplicate bit rows from a replay are harmless set union.
+            # Extraction-less pages count as seen too (ADVICE r5): else
+            # every re-crawl of a page that yields no groups re-runs
+            # the NLP, breaking the "re-crawl costs k md5s" contract.
+            bloom_bits(pages, m_bits=bloom_m_bits, k_hashes=bloom_k) \
                 .write.mode("append").parquet(seen_dir)
         with open(marker, "w") as fh:
             fh.write("merged\n")

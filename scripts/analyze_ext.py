@@ -2,9 +2,11 @@
 and what features distinguish the two classes? Also: which NPs are skipped
 for arg1?"""
 from __future__ import annotations
+import os
 import sys
 from collections import Counter
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from openie_backend_spark.sources import fixtures
 from openie_backend_spark.nlp.reverb import VERB_TAGS, W_TAGS, P_TAGS, noun_phrases
 

@@ -1,8 +1,10 @@
 """Inspect gold fixture patterns to infer ReVerb matcher rules."""
 from __future__ import annotations
+import os
 import sys
 from collections import Counter, defaultdict
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from openie_backend_spark.sources import fixtures
 
 golds = list(fixtures.iter_gold_extractions())

@@ -15,6 +15,9 @@ import sys
 import threading
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 
 def pid_cmd_cpu() -> dict[int, tuple[str, float]]:
     clk = os.sysconf("SC_CLK_TCK")

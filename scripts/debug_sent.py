@@ -1,8 +1,10 @@
 """Show gold vs predicted with full layers for mismatched sentences."""
 from __future__ import annotations
+import os
 import sys
 from collections import defaultdict
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from openie_backend_spark.nlp import reverb
 from openie_backend_spark.sources import fixtures
 

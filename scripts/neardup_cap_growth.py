@@ -10,10 +10,12 @@ Usage: python scripts/neardup_cap_growth.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -93,7 +95,7 @@ values, so capped totals can exceed k×99 by cross-group rep pairs
 Connectivity for `dup_clusters` labeling survives the cap (same test:
 one component, min-id label).
 """
-    with open("/root/repo/BENCH/NEARDUP.md", "a") as fh:
+    with open(os.path.join(REPO, "BENCH", "NEARDUP.md"), "a") as fh:
         fh.write(section)
     print("appended to BENCH/NEARDUP.md")
 

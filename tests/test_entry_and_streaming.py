@@ -8,6 +8,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_entry_contract(spark):
     import __spark_entry__ as m
@@ -29,8 +31,26 @@ def test_entry_contract(spark):
     assert set(oracles) >= set(qs), "every driver-window query needs an oracle"
 
 
+def _bucket_dirs(groups_dir):
+    """bucket dir name -> its parquet files."""
+    return {
+        d: [f for f in os.listdir(os.path.join(groups_dir, d)) if f.endswith(".parquet")]
+        for d in os.listdir(groups_dir) if d.startswith("bucket=")
+    }
+
+
+def _assert_one_file_per_bucket(groups_dir):
+    for d, files in _bucket_dirs(groups_dir).items():
+        assert len(files) == 1, f"{d} holds {len(files)} parquet files"
+
+
 def test_streaming_incremental_ingest(spark, tmp_path):
-    from openie_backend_spark.streaming.ingest import run_incremental
+    from openie_backend_spark.streaming.ingest import N_BUCKETS, run_incremental
+
+    # reading the groups table must list its bucket dirs on the driver,
+    # not in a listing job per read
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert int(threshold) > N_BUCKETS
 
     landing = tmp_path / "landing"
     groups_dir = str(tmp_path / "groups")
@@ -54,6 +74,8 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     run_incremental(spark, str(landing) + "/*", groups_dir, ckpt, batch1.schema)
     g1 = spark.read.parquet(groups_dir)
     assert g1.filter(F.col("rel_norm") == "acquire").first()["size"] == 1
+    _assert_one_file_per_bucket(groups_dir)
+    buckets_before = set(_bucket_dirs(groups_dir))
 
     # second landing file: same triple again + a new one → merge grows
     batch2 = spark.createDataFrame(
@@ -86,6 +108,7 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     assert g2.filter(F.col("rel_norm") == "be found by").count() == 1
 
     after = bucket_state()
+    _assert_one_file_per_bucket(groups_dir)
     from openie_backend_spark.streaming.ingest import bucket_col
 
     touched = {
@@ -99,6 +122,10 @@ def test_streaming_incremental_ingest(spark, tmp_path):
         if not any(f"bucket={b}/" in p for b in touched)
     }
     assert untouched_before, "test needs at least one untouched bucket"
+    # a touched bucket with no directory yet must merge, not fail the
+    # read of the touched buckets
+    assert {f"bucket={b}" for b in touched} - buckets_before, \
+        "test needs batch 2 to land in a bucket batch 1 did not create"
     for p, h in untouched_before.items():
         assert p in after and after[p] == h, f"untouched bucket rewritten: {p}"
 
@@ -146,6 +173,38 @@ def test_streaming_incremental_ingest(spark, tmp_path):
         f"incremental merge diverged from full-input grouping:\n"
         f"got {got}\nexpected {expected}"
     )
+
+
+@pytest.mark.parametrize("dedup_pages", [False, True])
+def test_ingest_extractionless_first_batch(spark, tmp_path, dedup_pages):
+    """A first micro-batch that yields no groups commits its marker
+    (and, with dedup_pages, its seen bits) although no groups dir
+    exists yet; the next batch then creates the table."""
+    from openie_backend_spark.streaming.ingest import run_incremental
+
+    landing = tmp_path / "landing"
+    groups_dir = str(tmp_path / "groups")
+    ckpt = str(tmp_path / "ckpt")
+    landing.mkdir()
+    schema = "url string, text string, lang string"
+    empty = spark.createDataFrame(
+        [("u0", "Good morning .", "en"), ("u1", "", "en")], schema)
+    empty.write.parquet(str(landing / "b1"))
+    run_incremental(spark, str(landing) + "/*", groups_dir, ckpt, empty.schema,
+                    dedup_pages=dedup_pages)
+    entries = os.listdir(groups_dir)
+    assert sum(e.startswith("_batch_") and e.endswith(".done") for e in entries) == 1
+    assert not any(e.startswith("bucket=") for e in entries)
+    assert ("_seen_bits" in entries) == dedup_pages
+
+    batch = spark.createDataFrame(
+        [("u2", "Acme Corp acquired Globex Inc. .", "en")], schema)
+    batch.write.parquet(str(landing / "b2"))
+    run_incremental(spark, str(landing) + "/*", groups_dir, ckpt, batch.schema,
+                    dedup_pages=dedup_pages)
+    acq = spark.read.parquet(groups_dir).filter(F.col("rel_norm") == "acquire").first()
+    assert acq["size"] == 1 and acq["needs_relink"]
+    _assert_one_file_per_bucket(groups_dir)
 
 
 def test_ingest_replay_guard_survives_checkpoint_reset(spark, tmp_path):
@@ -204,7 +263,7 @@ def test_cli_extract_roundtrips_through_tab_reader(spark, tmp_path):
         [_sys.executable, "-m", "openie_backend_spark", "extract",
          "--url", "http://t.test/1"],
         input=sentences, capture_output=True, text=True,
-        cwd="/root/repo", env={"PYTHONPATH": "/root/repo", "PATH": "/usr/bin:/bin"},
+        cwd=REPO, env={"PYTHONPATH": REPO, "PATH": "/usr/bin:/bin"},
     )
     assert proc.returncode == 0, proc.stderr[-500:]
     out_file = tmp_path / "cli.tab"
@@ -220,6 +279,32 @@ def test_cli_extract_roundtrips_through_tab_reader(spark, tmp_path):
     assert len(acme["tokens"]) == len(acme["pos_tags"]) == len(acme["chunk_tags"])
 
 
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """A session started outside the repo, with the package on the
+    driver's sys.path only, prewarms its Python workers and runs a
+    Python stage: get_spark ships the package root to the workers, and
+    a prewarm failure is logged, not swallowed."""
+    import subprocess
+    import sys
+
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from openie_backend_spark.session import get_spark\n"
+        "spark = get_spark(parallelism=2)\n"
+        "def same(batches):\n"
+        "    yield from batches\n"
+        "rows = spark.range(4).mapInPandas(same, 'id long').collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ROWS 4" in proc.stdout
+    assert "prewarm failed" not in proc.stderr, proc.stderr[-4000:]
+
+
 def test_py_files_zip_is_self_contained():
     """The --py-files package must carry everything executors need:
     code AND the trained model artifacts (scripts/submit_pipeline.py;
@@ -227,7 +312,7 @@ def test_py_files_zip_is_self_contained():
     import sys
     import zipfile
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from submit_pipeline import build_zip
 
     path = build_zip("/tmp/openie_pkg_test.zip")
