@@ -118,23 +118,3 @@ def dedup_instances(extractions: DataFrame) -> DataFrame:
             yield _dedup_one_group(carry)
 
     return keyed.mapInPandas(_batched, schema=schema)
-
-
-def dedup_grouped(groups: DataFrame) -> DataFrame:
-    """Same semantics applied to already-grouped REGs: explode the
-    instances array, dedup, regroup (used on the serving path,
-    ``ParallelExtractionGroupFetcher.scala:174-179``)."""
-    exploded = groups.select(*GROUP_KEY, F.explode("instances").alias("instance"))
-    flat = exploded.select(*GROUP_KEY, F.col("instance.*"))
-    schema = flat.schema
-    deduped = flat.groupBy(*GROUP_KEY).applyInPandas(
-        lambda pdf: _dedup_one_group(pdf), schema=schema
-    )
-    inst_cols = [c for c in deduped.columns if c not in GROUP_KEY]
-    return (
-        deduped.groupBy(*GROUP_KEY)
-        .agg(
-            F.collect_list(F.struct(*inst_cols)).alias("instances"),
-            F.count(F.lit(1)).alias("size"),
-        )
-    )

@@ -6,14 +6,35 @@ Single place where scale-relevant knobs live: AQE (runtime re-planning
 path), and shuffle-partition sizing. On a real cluster the same
 settings apply via ``spark-submit --conf``; ``local[K]`` is only the
 sandbox harness.
+
+``get_spark`` also prewarms a new session before it returns, so that no
+build pays one-off process costs (``_prewarm_session``). Four steps run
+concurrently, each on its own driver thread: the Python worker pool,
+one framework query (codegen, sort, aggregate, window, join, AQE), a
+parquet round trip, and the ICU case-map init. They run concurrently
+because each mostly waits on its own thing (the Python daemon's
+imports, JVM class loading and code generation, one class init): on a
+4-core box the four took 12.9-14.2 s one after another and 8.3 s
+together. ICU is warmed because the first ``lower``/``upper`` in a JVM
+title-cases every code point under a class-init lock that stalls the
+other task threads of that stage; ``spark.sql.icu.caseMappings.enabled``
+stays on, because turning it off changes how non-ASCII text is
+case-mapped. In local mode the driver and the tasks share one JVM; on a
+cluster the JVM steps warm the executors that run their tasks, and the
+ICU step only the driver.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import shutil
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, Window
+from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 
@@ -23,71 +44,145 @@ _log = logging.getLogger(__name__)
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Start the Python worker pool once, at session creation.
+def _warm_python_pool(spark: SparkSession) -> None:
+    """Start the Python worker daemon, then fork one worker per free
+    task slot.
 
     Worker creation goes through the daemon's single accept loop —
     measured 1.27 s of per-task "time to start Python workers" on the
     first Python stage of a cold session (event-log accumulators,
-    scripts/cpu_attrib.py). A long-lived session (cluster executors,
-    the local harness alike) wants that pool up BEFORE the first real
-    query, exactly like executor JVMs are started ahead of work. One
-    trivial mapInPandas over ``defaultParallelism`` single-row
-    partitions forks a worker per task slot; ``spark.python.worker.reuse``
-    (default on) then keeps them for every later Python stage.
-    Best-effort: a failure must never block session creation, so it
-    is logged with its traceback and the session is returned cold.
+    scripts/cpu_attrib.py). The first job, one single-row partition,
+    starts the daemon (its preload takes ~3 s) on ONE task slot, so the
+    other prewarm steps run their tasks on the rest meanwhile; an
+    n-partition first job would hold every slot while its tasks wait
+    for the daemon. The second, ``defaultParallelism`` single-row
+    partitions, then forks a worker per slot that is free (a busy slot
+    gets its worker, cheaply, at first use);
+    ``spark.python.worker.reuse`` (default on) keeps them for every
+    later Python stage.
     """
-    try:
-        n = spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
 
-        def _touch(batches):
-            for b in batches:
-                yield b
+    def _touch(batches):
+        for b in batches:
+            yield b
 
+    for parts in (1, n):
         (
-            spark.range(n, numPartitions=1).repartition(n)
+            spark.range(parts, numPartitions=parts)
             .mapInPandas(_touch, "id long")
             .write.format("noop").mode("overwrite").save()
         )
-        # also warm the shared JVM machinery every real query uses —
-        # Janino/codegen compilation, Tungsten sort/hash-agg, window
-        # and join operators, the AQE loop — on a few thousand
-        # synthetic rows. This compiles the FRAMEWORK (shared classes
-        # + the compiler itself), not any query's specific plan; the
-        # first real query of a fresh process otherwise pays it.
-        from pyspark.sql import Window, functions as F
 
-        base = spark.range(8192).select(
-            F.col("id"), (F.col("id") % 63).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("s"),
-        )
-        dim = base.groupBy("k").agg(F.max("s").alias("m"),
-                                    F.count(F.lit(1)).alias("c"))
-        w = Window.partitionBy("k").orderBy("s")
-        (
-            base.join(dim, "k")
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .groupBy("k").agg(F.sum("id").alias("t"))
-            .write.format("noop").mode("overwrite").save()
-        )
-        # parquet reader/writer classes (footer, column readers,
-        # vectorized batch path) — the other framework surface every
-        # real query touches first
-        import shutil
-        import tempfile
 
-        tmp = tempfile.mkdtemp(prefix="spark_prewarm_")
+def _synthetic(spark: SparkSession):
+    """A few thousand synthetic rows and a grouped aggregate of them."""
+    base = spark.range(8192).select(
+        F.col("id"), (F.col("id") % 63).alias("k"),
+        F.md5(F.col("id").cast("string")).alias("s"),
+    )
+    dim = base.groupBy("k").agg(F.max("s").alias("m"),
+                                F.count(F.lit(1)).alias("c"))
+    return base, dim
+
+
+def _warm_jvm(spark: SparkSession) -> None:
+    """The shared JVM machinery every real query uses: Janino/codegen,
+    Tungsten sort and hash aggregate, window and join operators, the
+    AQE loop. This compiles the FRAMEWORK (shared classes and the
+    compiler itself), not any query's specific plan."""
+    base, dim = _synthetic(spark)
+    w = Window.partitionBy("k").orderBy("s")
+    (
+        base.join(dim, "k")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 3)
+        .groupBy("k").agg(F.sum("id").alias("t"))
+        .write.format("noop").mode("overwrite").save()
+    )
+
+
+def _warm_parquet(spark: SparkSession) -> None:
+    """Parquet writer and reader classes (footer, column readers, the
+    vectorized batch path): the other framework surface every real
+    query touches first."""
+    _, dim = _synthetic(spark)
+    tmp = tempfile.mkdtemp(prefix="spark_prewarm_")
+    try:
+        dim.write.mode("overwrite").parquet(tmp + "/p")
+        spark.read.parquet(tmp + "/p").write.format("noop") \
+            .mode("overwrite").save()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _warm_icu(spark: SparkSession) -> None:
+    """Run the JVM-wide ICU case-map init on a driver thread.
+
+    Spark case-maps through ICU (``spark.sql.icu.caseMappings.enabled``,
+    on by default; it stays on, because turning it off changes non-ASCII
+    case mapping). The first ``lower``/``upper`` in a JVM runs
+    ``CollationAwareUTF8String.<clinit>``, which title-cases all
+    1,114,112 code points: 1.4-1.55 s on one thread, while every other
+    task thread of that stage waits on the class-init lock (first
+    lowercasing job of a cold build: 10.4 task-s cold, 2.0 warm).
+    Constant folding evaluates ``lower`` of a literal in the optimizer,
+    so the init runs on this driver thread while the query is planned;
+    the one-row job that follows finds the class ready. In local mode
+    driver and tasks share this JVM, so every later task does too.
+    """
+    spark.range(1).select(F.lower(F.lit("A"))).collect()
+
+
+# (name, step); the threads start together, so the order only sets the
+# order of the log line
+_PREWARM_STEPS = (
+    ("pool", _warm_python_pool),
+    ("jvm", _warm_jvm),
+    ("parquet", _warm_parquet),
+    ("icu", _warm_icu),
+)
+
+
+def _prewarm_session(spark: SparkSession) -> dict[str, tuple[float, bool]]:
+    """Run every prewarm step at once and wait for all of them.
+
+    A long-lived session (cluster executors, the local harness alike)
+    wants its one-off costs paid BEFORE the first real query, the way
+    executor JVMs are started ahead of work; the first query of a fresh
+    process otherwise pays them. Each step runs on its own driver
+    thread (why: module docstring), its jobs tagged with the job group
+    ``prewarm.<name>`` on that thread only, so the caller's thread keeps
+    its local properties.
+
+    Best-effort: a failed step is logged by name with its traceback and
+    the others still run; the session is returned without that warm-up.
+    Returns ``{name: (wall seconds, ok)}`` and logs it as one INFO line.
+    """
+    sc = spark.sparkContext
+
+    def _run(name, step):
+        t0 = time.perf_counter()
         try:
-            dim.write.mode("overwrite").parquet(tmp + "/p")
-            spark.read.parquet(tmp + "/p").write.format("noop") \
-                .mode("overwrite").save()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:
-        _log.warning("Python worker prewarm failed; the session starts cold",
-                     exc_info=True)
+            sc.setJobGroup(f"prewarm.{name}", f"session prewarm: {name}")
+            step(spark)
+            ok = True
+        except Exception:
+            _log.warning("prewarm failed in step %r; the session starts "
+                         "without it", name, exc_info=True)
+            ok = False
+        return time.perf_counter() - t0, ok
+
+    t0 = time.perf_counter()
+    with ThreadPoolExecutor(len(_PREWARM_STEPS),
+                            thread_name_prefix="prewarm") as pool:
+        futures = {name: pool.submit(_run, name, step)
+                   for name, step in _PREWARM_STEPS}
+        report = {name: f.result() for name, f in futures.items()}
+    _log.info("session prewarm %.2f s: %s", time.perf_counter() - t0,
+              ", ".join(f"{name} {s:.2f} s {'ok' if ok else 'failed'}"
+                        for name, (s, ok) in report.items()))
+    return report
 
 
 def get_spark(
@@ -136,6 +231,6 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if not getattr(spark, "_openie_prewarmed", False):
-        _prewarm_python_workers(spark)
+        _prewarm_session(spark)
         spark._openie_prewarmed = True
     return spark

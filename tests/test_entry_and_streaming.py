@@ -305,6 +305,72 @@ def test_workers_import_package_from_any_cwd(tmp_path):
     assert "prewarm failed" not in proc.stderr, proc.stderr[-4000:]
 
 
+def _class_needs_init(spark, name):
+    """Load ``name`` without initializing it and ask the JVM whether
+    its static initializer has still to run."""
+    jvm = spark._jvm
+    loader = jvm.java.lang.Thread.currentThread().getContextClassLoader()
+    cls = jvm.java.lang.Class.forName(name, False, loader)
+    field = jvm.java.lang.Class.forName("sun.misc.Unsafe").getDeclaredField(
+        "theUnsafe")
+    field.setAccessible(True)
+    return field.get(None).shouldBeInitialized(cls)
+
+
+def test_prewarm_initializes_icu_case_map(spark):
+    """The ICU case-map class init (title-casing every code point) ran
+    at session start, so no build's first lower()/upper() pays it."""
+    assert not _class_needs_init(
+        spark, "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
+
+
+def test_prewarm_step_failure_is_isolated(spark, monkeypatch, caplog):
+    """One failing step is logged by name; every other step still runs,
+    the session still runs Python stages, and the caller's thread is
+    left without a job group or any other local property."""
+    import logging
+
+    from openie_backend_spark import session
+
+    ran = []
+
+    def recorded(name, step):
+        def run(s):
+            ran.append(name)
+            step(s)
+        return run
+
+    def broken(s):
+        raise RuntimeError("planted prewarm fault")
+
+    steps = [(name, recorded(name, broken if name == "parquet" else step))
+             for name, step in session._PREWARM_STEPS]
+    monkeypatch.setattr(session, "_PREWARM_STEPS", tuple(steps))
+    props = lambda: spark.sparkContext._jsc.sc().getLocalProperties().toString()
+    before = props()
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        report = session._prewarm_session(spark)
+
+    assert sorted(ran) == sorted(name for name, _ in steps)
+    assert {name: ok for name, (_, ok) in report.items()} == {
+        name: name != "parquet" for name, _ in steps}
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "prewarm failed" in warnings[0].getMessage()
+    assert "'parquet'" in warnings[0].getMessage()
+    assert "planted prewarm fault" in caplog.text
+    info = [r.getMessage() for r in caplog.records if r.levelno == logging.INFO]
+    assert any("parquet" in m and "failed" in m and "pool" in m for m in info)
+
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    assert props() == before
+
+    def same(batches):
+        yield from batches
+
+    assert spark.range(4).mapInPandas(same, "id long").count() == 4
+
+
 def test_py_files_zip_is_self_contained():
     """The --py-files package must carry everything executors need:
     code AND the trained model artifacts (scripts/submit_pipeline.py;
@@ -435,3 +501,41 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
     want = sorted(key(r) for r in w_last.collect())
     assert got == want
     assert len(got) == 3  # user1 x2 closed, user2 x1 closed
+
+
+def test_windowed_counts_scope_state_partitions(spark, tmp_path, monkeypatch):
+    """``state_partitions`` reaches the stream's state store through its
+    own session: the caller's conf is never set, and the checkpoint
+    holds exactly that many state-store partitions."""
+    from datetime import datetime
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from openie_backend_spark.streaming.windows import windowed_event_counts
+
+    caller_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    set_on_caller = []
+    real_set = RuntimeConfig.set
+
+    def spy(conf, key, value):
+        if conf is spark.conf:
+            set_on_caller.append(key)
+        return real_set(conf, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    landing = str(tmp_path / "landing")
+    ck = str(tmp_path / "ck")
+    spark.createDataFrame(
+        [(1, datetime(2024, 6, 1, 1, 10), 1, "click", 1.0, "{}"),
+         (2, datetime(2024, 6, 1, 9, 0), 1, "view", 1.0, "{}")],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string",
+    ).coalesce(1).write.parquet(landing)
+    windowed_event_counts(spark, landing, str(tmp_path / "out"), ck,
+                          state_partitions=3)
+
+    assert set_on_caller == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == caller_parts != "3"
+    stores = sorted(d for d in os.listdir(os.path.join(ck, "state", "0"))
+                    if d.isdigit())
+    assert stores == ["0", "1", "2"]
